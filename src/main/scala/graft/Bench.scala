@@ -430,8 +430,10 @@ object Bench {
         // concurrent adjudication script) must never observe a half-written
         // bench_last.json — the r17 round lost its entire per-query PERF
         // table to a truncated capture, so the file copies are the
-        // authoritative artifact and must be all-or-nothing
-        val tmp = pth.resolveSibling(pth.getFileName.toString + ".tmp")
+        // authoritative artifact and must be all-or-nothing. The tmp name
+        // carries the PID so two concurrent runs never share a tmp file.
+        val tmp = pth.resolveSibling(
+          s"${pth.getFileName}.${ProcessHandle.current().pid()}.tmp")
         java.nio.file.Files.write(tmp, (line + "\n").getBytes("UTF-8"))
         try java.nio.file.Files.move(tmp, pth,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,

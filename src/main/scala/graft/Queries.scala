@@ -1086,10 +1086,12 @@ object Queries {
   // rows consume this frame, and re-paying the orders⋈customer⋈nation
   // shuffle per row measured ~0.3-0.5s each at sf0.1. Charged to the
   // alphabetically first consumer per the bench timing contract.
-  private def enrichedProxy(s: SparkSession, d: String): DataFrame =
-    memoized(s, d, "enrichedProxy")(enrichedProxyUncached(s, d))
+  /** [[graft.marts.Marts.counts]] over [[enrichedProxy]], memoized: the
+    * a1–a6 rows roll their marts up from it, as the pipeline does. */
+  private def proxyCounts(s: SparkSession, d: String): DataFrame =
+    memoized(s, d, "proxyCounts")(graft.marts.Marts.counts(enrichedProxy(s, d)))
 
-  private def enrichedProxyUncached(s: SparkSession, d: String): DataFrame =
+  private def enrichedProxy(s: SparkSession, d: String): DataFrame =
     T(s, d, "orders")
       .join(T(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey")),
@@ -1177,9 +1179,11 @@ object Queries {
         "FROM lineitem GROUP BY 1,2"),
       (s, d) => pricingSummary(s, d)),
 
-    // A1 — the REAL Marts.focosDiarioMunicipio under the gate (round-16:
-    // the old row tested an aggregate SHAPE over lineitem; this one runs
-    // the actual builder): coalesce(view_ts::date, file_date) day key,
+    // A1 — the REAL daily Marts.municipio under the gate, rolled up from
+    // the count frame as the pipeline does (round-16: the old row tested an
+    // aggregate SHAPE over lineitem; this one runs the actual builder; the
+    // oracle aggregates raw rows, so it checks the rollup): the
+    // coalesce(view_ts::date, file_date) day key, the
     // null-municipality drop, and the reference's max(area) density
     // denominator (10_focos_diario_municipio.sql:44-47). Density emitted
     // as the exact half-up integer at 1e-4 scale (densityE4 pattern).
@@ -1192,14 +1196,14 @@ object Queries {
         "CAST(n_focos AS BIGINT) AS n_focos, " +
         "(2000000 * n_focos + mun_area_km2) // (2 * mun_area_km2) AS density_e4 " +
         "FROM m ORDER BY day, mun_cd_mun"),
-      (s, d) => graft.marts.Marts.focosDiarioMunicipio(enrichedProxy(s, d))
+      (s, d) => graft.marts.Marts.municipio(proxyCounts(s, d), graft.marts.Marts.Daily)
         .select(col("day"), col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"),
           col("mun_area_km2"), col("n_focos"),
           expr("(2000000 * n_focos + mun_area_km2) div (2 * mun_area_km2)")
             .as("density_e4"))
         .orderBy("day", "mun_cd_mun")),
 
-    // A2 — the REAL Marts.focosMensalMunicipio (11_focos_mensal_municipio
+    // A2 — the REAL monthly Marts.municipio (11_focos_mensal_municipio
     // .sql): same semantics with the coalesce day key truncated to month.
     QueryDef("a2_monthly_mart", Some(
       s"WITH e AS ($enrProxySql), " +
@@ -1210,14 +1214,14 @@ object Queries {
         "CAST(n_focos AS BIGINT) AS n_focos, " +
         "(2000000 * n_focos + mun_area_km2) // (2 * mun_area_km2) AS density_e4 " +
         "FROM m ORDER BY month, mun_cd_mun"),
-      (s, d) => graft.marts.Marts.focosMensalMunicipio(enrichedProxy(s, d))
+      (s, d) => graft.marts.Marts.municipio(proxyCounts(s, d), graft.marts.Marts.Monthly)
         .select(col("month"), col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"),
           col("mun_area_km2"), col("n_focos"),
           expr("(2000000 * n_focos + mun_area_km2) div (2 * mun_area_km2)")
             .as("density_e4"))
         .orderBy("month", "mun_cd_mun")),
 
-    // A3 — daily UF mart over the REAL Marts.focosDiarioUf: day key is
+    // A3 — daily UF mart over the REAL Marts.uf: day key is
     // coalesce(view_ts::date, file_date) (20_focos_diario_uf.sql:30-43),
     // area joined INNER (UFs without area drop — 'BUILDING' is excluded
     // from the dim to make that drop observable). Density emitted as an
@@ -1228,9 +1232,9 @@ object Queries {
         "mun_uf AS uf, count(*) AS n_focos FROM e WHERE mun_uf IS NOT NULL GROUP BY 1,2) " +
         s"SELECT m.day, m.uf, CAST(m.n_focos AS BIGINT) AS n_focos, ua.uf_area_km2, " +
         s"$densityE4Sql AS density_e4 FROM m JOIN ua USING (uf) ORDER BY m.day, m.uf"),
-      (s, d) => graft.marts.Marts.focosDiarioUf(enrichedProxy(s, d),
+      (s, d) => graft.marts.Marts.uf(proxyCounts(s, d),
           graft.marts.Marts.ufAreaRollup(municipiosProxy(s, d))
-            .filter(col("uf") =!= "BUILDING"))
+            .filter(col("uf") =!= "BUILDING"), graft.marts.Marts.Daily)
         .select(col("day"), col("uf"), col("n_focos"), col("uf_area_km2"),
           expr(densityE4).as("density_e4"))
         .orderBy("day", "uf")),
@@ -1243,9 +1247,9 @@ object Queries {
         "mun_uf AS uf, count(*) AS n_focos FROM e WHERE mun_uf IS NOT NULL GROUP BY 1,2) " +
         s"SELECT m.month, m.uf, CAST(m.n_focos AS BIGINT) AS n_focos, ua.uf_area_km2, " +
         s"$densityE4Sql AS density_e4 FROM m JOIN ua USING (uf) ORDER BY m.month, m.uf"),
-      (s, d) => graft.marts.Marts.focosMensalUf(enrichedProxy(s, d),
+      (s, d) => graft.marts.Marts.uf(proxyCounts(s, d),
           graft.marts.Marts.ufAreaRollup(municipiosProxy(s, d))
-            .filter(col("uf") =!= "BUILDING"))
+            .filter(col("uf") =!= "BUILDING"), graft.marts.Marts.Monthly)
         .select(col("month"), col("uf"), col("n_focos"), col("uf_area_km2"),
           expr(densityE4).as("density_e4"))
         .orderBy("month", "uf")),
@@ -1258,7 +1262,8 @@ object Queries {
         "SELECT file_date AS day, cd_bioma, max(bioma) AS bioma, " +
         "CAST(count(*) AS INT) AS focos FROM e WHERE cd_bioma IS NOT NULL " +
         "GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosDiarioBioma(enrichedProxy(s, d))
+      (s, d) => graft.marts.Marts.keyed(proxyCounts(s, d), graft.marts.Marts.Daily,
+          "cd_bioma", Seq("bioma"))
         .orderBy("day", "cd_bioma")),
 
     // A4 monthly (41_*.sql — still file_date-keyed).
@@ -1267,7 +1272,8 @@ object Queries {
         "SELECT CAST(date_trunc('month', file_date) AS DATE) AS month, cd_bioma, " +
         "max(bioma) AS bioma, CAST(count(*) AS INT) AS focos FROM e " +
         "WHERE cd_bioma IS NOT NULL GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosMensalBioma(enrichedProxy(s, d))
+      (s, d) => graft.marts.Marts.keyed(proxyCounts(s, d), graft.marts.Marts.Monthly,
+          "cd_bioma", Seq("bioma"))
         .orderBy("month", "cd_bioma")),
 
     // A5 — UC daily mart (50_focos_diario_uc.sql): biome shape, file_date
@@ -1277,7 +1283,7 @@ object Queries {
         "SELECT file_date AS day, cd_cnuc, max(uc_nome) AS uc_nome, " +
         "CAST(count(*) AS INT) AS focos FROM e WHERE cd_cnuc IS NOT NULL " +
         "GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosDiarioKeyed(enrichedProxy(s, d),
+      (s, d) => graft.marts.Marts.keyed(proxyCounts(s, d), graft.marts.Marts.Daily,
           "cd_cnuc", Seq("uc_nome"))
         .orderBy("day", "cd_cnuc")),
 
@@ -1288,7 +1294,7 @@ object Queries {
         "SELECT CAST(date_trunc('month', file_date) AS DATE) AS month, cd_cnuc, " +
         "max(uc_nome) AS uc_nome, CAST(count(*) AS INT) AS focos FROM e " +
         "WHERE cd_cnuc IS NOT NULL GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosMensalKeyed(enrichedProxy(s, d),
+      (s, d) => graft.marts.Marts.keyed(proxyCounts(s, d), graft.marts.Marts.Monthly,
           "cd_cnuc", Seq("uc_nome"))
         .orderBy("month", "cd_cnuc")),
 
@@ -1298,7 +1304,7 @@ object Queries {
         "SELECT CAST(date_trunc('month', file_date) AS DATE) AS month, terrai_cod, " +
         "max(ti_nome) AS ti_nome, CAST(count(*) AS INT) AS focos FROM e " +
         "WHERE terrai_cod IS NOT NULL GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosMensalKeyed(enrichedProxy(s, d),
+      (s, d) => graft.marts.Marts.keyed(proxyCounts(s, d), graft.marts.Marts.Monthly,
           "terrai_cod", Seq("ti_nome"))
         .orderBy("month", "terrai_cod")),
 
@@ -1311,7 +1317,7 @@ object Queries {
         "SELECT file_date AS day, terrai_cod, max(ti_nome) AS ti_nome, " +
         "CAST(count(*) AS INT) AS focos FROM e WHERE terrai_cod IS NOT NULL " +
         "GROUP BY 1,2 ORDER BY 1,2"),
-      (s, d) => graft.marts.Marts.focosDiarioKeyed(enrichedProxy(s, d),
+      (s, d) => graft.marts.Marts.keyed(proxyCounts(s, d), graft.marts.Marts.Daily,
           "terrai_cod", Seq("ti_nome"))
         .orderBy("day", "terrai_cod")),
 

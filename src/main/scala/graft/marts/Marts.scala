@@ -16,10 +16,13 @@ import org.apache.spark.sql.types.DecimalType
   * Ratio columns use Decimal arithmetic to match Postgres `numeric`
   * rounding (§7.4 risk 3).
   *
-  * Scale: every mart is a single hash-aggregate over the enriched fact;
-  * partial aggregation halves shuffle volume; output tables are written
-  * partitioned by day/month with dynamic partition overwrite so re-runs
-  * replace exactly one partition (the delete-day-then-insert analog, K2).
+  * Scale: as the reference answers every dashboard aggregate from one
+  * count-only cube, every mart here is a rollup of one count frame
+  * ([[counts]]), so the enriched facts are read and aggregated once per
+  * rebuild and each mart sums that narrow frame. Output tables are
+  * written partitioned by day/month with dynamic partition overwrite so
+  * re-runs replace exactly one partition (the delete-day-then-insert
+  * analog, K2).
   */
 object Marts {
 
@@ -32,63 +35,49 @@ object Marts {
     round((lit(100) * n.cast(DecimalType(38, 10))) /
       when(area === 0, null).otherwise(area).cast(DecimalType(38, 10)), 4)
 
-  /** A1 — daily municipality mart (10_focos_diario_municipio.sql:28-51). */
-  def focosDiarioMunicipio(enriched: DataFrame): DataFrame =
-    enriched.filter(col("mun_cd_mun").isNotNull)
-      .groupBy(dayKey.as("day"), col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"))
-      .agg(max("mun_area_km2").as("mun_area_km2"), count(lit(1)).as("n_focos"))
+  /** The count frame every mart rolls up: enriched rows grouped by both
+    * day keys (`file_date`, and [[dayKey]] as `day`), every dimension
+    * column the cube keeps, and `mun_area_km2`, with the row count `n`.
+    * Rolling a mart up from it is exact: every mart value is a count, a
+    * `max` of a label or area, or a ratio of those. */
+  def counts(enriched: DataFrame): DataFrame =
+    enriched.groupBy(col("file_date"), dayKey.as("day"),
+        col("mun_uf"), col("mun_cd_mun"), col("mun_nm_mun"), col("mun_area_km2"),
+        col("bioma"), col("cd_bioma"), col("uc_nome"), col("cd_cnuc"),
+        col("ti_nome"), col("terrai_cod"))
+      .agg(count(lit(1)).as("n"))
+
+  /** Time grain of a mart: the name of its key (and partition) column, and
+    * the map from a date to that key. */
+  final case class Grain(name: String, of: Column => Column)
+  val Daily: Grain = Grain("day", identity)
+  val Monthly: Grain = Grain("month", c => date_trunc("month", c).cast("date"))
+
+  /** A1/A2 — municipality marts on the derived day key
+    * (10_focos_diario_municipio.sql:28-51, 11_focos_mensal_municipio.sql). */
+  def municipio(counts: DataFrame, g: Grain): DataFrame =
+    counts.filter(col("mun_cd_mun").isNotNull)
+      .groupBy(g.of(col("day")).as(g.name), col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"))
+      .agg(max("mun_area_km2").as("mun_area_km2"), sum("n").as("n_focos"))
       .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("mun_area_km2")))
 
-  /** A2 — monthly municipality mart (11_focos_mensal_municipio.sql). */
-  def focosMensalMunicipio(enriched: DataFrame): DataFrame =
-    enriched.filter(col("mun_cd_mun").isNotNull)
-      .groupBy(date_trunc("month", dayKey).cast("date").as("month"),
-        col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"))
-      .agg(max("mun_area_km2").as("mun_area_km2"), count(lit(1)).as("n_focos"))
-      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("mun_area_km2")))
-
-  /** A3/J6 — daily UF mart with area join (20_focos_diario_uf.sql:30-43). */
-  def focosDiarioUf(enriched: DataFrame, ufArea: DataFrame): DataFrame =
-    enriched.filter(col("mun_uf").isNotNull)
-      .groupBy(dayKey.as("day"), col("mun_uf").as("uf"))
-      .agg(count(lit(1)).as("n_focos"))
-      .join(broadcast(ufArea), "uf") // inner: UFs without area drop, as in J6
-      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("uf_area_km2")))
-
-  /** A3 monthly — UF mart keyed by month (21_focos_mensal_uf.sql:30-43). */
-  def focosMensalUf(enriched: DataFrame, ufArea: DataFrame): DataFrame =
-    enriched.filter(col("mun_uf").isNotNull)
-      .groupBy(date_trunc("month", dayKey).cast("date").as("month"),
-        col("mun_uf").as("uf"))
-      .agg(count(lit(1)).as("n_focos"))
+  /** A3/J6 — UF marts on the derived day key with the area join
+    * (20/21_focos_*_uf.sql:30-43). Inner join: UFs without area drop. */
+  def uf(counts: DataFrame, ufArea: DataFrame, g: Grain): DataFrame =
+    counts.filter(col("mun_uf").isNotNull)
+      .groupBy(g.of(col("day")).as(g.name), col("mun_uf").as("uf"))
+      .agg(sum("n").as("n_focos"))
       .join(broadcast(ufArea), "uf")
       .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("uf_area_km2")))
 
-  /** A4 — biome daily/monthly marts: keyed on FILE_DATE, label = max()
-    * (40_focos_diario_bioma.sql:20-30). */
-  def focosDiarioBioma(enriched: DataFrame): DataFrame =
-    enriched.filter(col("cd_bioma").isNotNull)
-      .groupBy(col("file_date").as("day"), col("cd_bioma"))
-      .agg(max("bioma").as("bioma"), count(lit(1)).cast("int").as("focos"))
-
-  def focosMensalBioma(enriched: DataFrame): DataFrame =
-    enriched.filter(col("cd_bioma").isNotNull)
-      .groupBy(date_trunc("month", col("file_date")).cast("date").as("month"), col("cd_bioma"))
-      .agg(max("bioma").as("bioma"), count(lit(1)).cast("int").as("focos"))
-
-  /** A5/A6 — UC and TI marts share the biome shape (50/60_*.sql). */
-  def focosDiarioKeyed(enriched: DataFrame, keyCol: String, labelCols: Seq[String]): DataFrame =
-    enriched.filter(col(keyCol).isNotNull)
-      .groupBy(col("file_date").as("day"), col(keyCol))
-      .agg(labelCols.map(c => max(c).as(c)).head,
-        (labelCols.map(c => max(c).as(c)).tail :+ count(lit(1)).cast("int").as("focos")): _*)
-
-  /** A5/A6 monthly flavor (51/61_*.sql — still file_date-keyed). */
-  def focosMensalKeyed(enriched: DataFrame, keyCol: String, labelCols: Seq[String]): DataFrame =
-    enriched.filter(col(keyCol).isNotNull)
-      .groupBy(date_trunc("month", col("file_date")).cast("date").as("month"), col(keyCol))
-      .agg(labelCols.map(c => max(c).as(c)).head,
-        (labelCols.map(c => max(c).as(c)).tail :+ count(lit(1)).cast("int").as("focos")): _*)
+  /** A4–A6 — biome, UC and TI marts: keyed on raw FILE_DATE, labels by
+    * `max()` (40/50/60_focos_diario_*.sql:20-30, 41/51/61_*_mensal_*.sql). */
+  def keyed(counts: DataFrame, g: Grain, keyCol: String, labelCols: Seq[String]): DataFrame = {
+    val aggs = labelCols.map(c => max(c).as(c)) :+ sum("n").cast("int").as("focos")
+    counts.filter(col(keyCol).isNotNull)
+      .groupBy(g.of(col("file_date")).as(g.name), col(keyCol))
+      .agg(aggs.head, aggs.tail: _*)
+  }
 
   /** A7/W3 — period stats + argmax peak day with the DISTINCT ON tiebreak
     * `order by uf, n_focos desc, day` (40_focos_periodo_uf.sql:22-73).
@@ -134,16 +123,20 @@ object Marts {
   }
 
   /** A8 — the serving fact cube `mv_focos_day_dim`
-    * (sqlm/marts/canonical/065_mv_focos_day_dim.sql:5-20): group by the 11
-    * dimension columns, count. Every API aggregate reads this table.
-    */
-  def factCube(enrichedFull: DataFrame): DataFrame =
-    enrichedFull.groupBy(
-        dayKey.as("day"),
-        col("mun_uf").as("uf"), col("cd_uf"), col("mun_cd_mun").as("cd_mun"),
+    * (sqlm/marts/canonical/065_mv_focos_day_dim.sql:5-20): counts by day
+    * and the 11 dimension columns. Every API aggregate reads this table.
+    * `cd_uf` is the UF code the reference denormalizes; the dimensions
+    * carry the UF as text, so it repeats `uf`. */
+  def cube(counts: DataFrame): DataFrame =
+    counts.groupBy(
+        col("day"),
+        col("mun_uf").as("uf"), col("mun_uf").as("cd_uf"), col("mun_cd_mun").as("cd_mun"),
         col("mun_nm_mun"), col("bioma"), col("cd_bioma"),
         col("uc_nome"), col("cd_cnuc"), col("ti_nome"), col("terrai_cod"))
-      .agg(count(lit(1)).as("n_focos"))
+      .agg(sum("n").as("n_focos"))
+
+  /** [[cube]] straight from enriched rows. */
+  def factCube(enriched: DataFrame): DataFrame = cube(counts(enriched))
 
   /** J7 — geo view: mart rows inner-joined to their web geometry
     * (sql/marts/90_geo_focos_diario_municipio.sql:13-15). The geometry

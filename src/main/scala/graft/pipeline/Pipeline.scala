@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Date
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.enrich.Enrich
@@ -18,8 +18,8 @@ object Pipeline {
     * bound fails loudly instead. Generous by design — it exists to catch
     * wedges, never to time out real work; override via env for clusters
     * whose single mart write legitimately exceeds it. */
-  private[graft] val awaitLimit: scala.concurrent.duration.Duration =
-    scala.concurrent.duration.Duration(
+  private[graft] val awaitLimit: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.FiniteDuration(
       sys.env.getOrElse("SPARK_GRAFT_PARALLEL_AWAIT_SEC", "14400").toLong,
       java.util.concurrent.TimeUnit.SECONDS)
 
@@ -29,11 +29,18 @@ object Pipeline {
     * freed by one job's tail with the next job's tasks, and overlaps the
     * per-action driver latency: plan analysis + commit + listing, ~half
     * the wall on lifecycle rows). Daemon threads (a wedged body can never
-    * pin the JVM open) + the bounded await above. ALL futures are awaited
-    * before the first failure is rethrown, so nothing is left in flight
-    * when the caller sees the exception. Job groups/descriptions are
-    * thread-local, so per-thread submission keeps UI attribution correct. */
-  private[graft] def inParallel[A](bodies: Seq[() => A], threads: Int = 4): Seq[A] = {
+    * pin the JVM open), and one deadline `limit` away shared by every
+    * await, so the call returns or fails within about `limit` however many
+    * bodies it runs. Every future is awaited before the first failure is
+    * rethrown, so when a body fails the others have finished or timed out.
+    * On a timeout the pool is interrupted (`shutdownNow`): queued bodies
+    * never start, but a running body that does not answer the interrupt —
+    * a Spark job it submitted — can still be in flight when the caller sees
+    * the exception. Job groups/descriptions are thread-local, so
+    * per-thread submission keeps UI attribution correct. */
+  private[graft] def inParallel[A](
+      bodies: Seq[() => A], threads: Int = 4,
+      limit: scala.concurrent.duration.FiniteDuration = awaitLimit): Seq[A] = {
     if (bodies.lengthCompare(1) <= 0) return bodies.map(_())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(threads, bodies.length),
@@ -45,11 +52,12 @@ object Pipeline {
     val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
       val fs = bodies.map(b => scala.concurrent.Future(b())(ec))
+      val deadline = limit.fromNow
       val rs = fs.map(f => scala.util.Try(
-        scala.concurrent.Await.result(f, awaitLimit)))
+        scala.concurrent.Await.result(f, deadline.timeLeft)))
       rs.collectFirst { case scala.util.Failure(e) => throw e }
       rs.map(_.get)
-    } finally pool.shutdown()
+    } finally pool.shutdownNow()
   }
 }
 
@@ -202,29 +210,17 @@ final class Pipeline(spark: SparkSession, root: String,
     * single-day run scan O(retention) partitions instead of full history
     * (the reference scans the FULL enriched table with only the day-key
     * predicate, 10_focos_diario_municipio.sql:50 — the window is the
-    * deliberate scale deviation, same as [[monthInput]]'s). Padded BOTH
-    * sides: the day key can lag file_date (GMT view_ts vs local file day)
-    * AND lead it (late files carrying earlier view days — a monthly-
-    * archive backfill), so a one-sided [d-retention, d] window silently
-    * dropped late-arriving rows from every day-d rebuild. */
+    * deliberate scale deviation). Padded BOTH sides: the day key can lag
+    * file_date (GMT view_ts vs local file day) AND lead it (late files
+    * carrying earlier view days — a monthly-archive backfill), so a
+    * one-sided [d-retention, d] window silently dropped late-arriving rows
+    * from every day-d rebuild. */
   def martInput(enrichedAll: DataFrame, d: Date): DataFrame =
-    enrichedAll
-      .filter(col("file_date").between(
-        date_sub(lit(d), retentionDays), date_add(lit(d), retentionDays)))
-      .filter(Marts.dayKey === lit(d))
+    enrichedAll.filter(fileDateNear(d, d)).filter(Marts.dayKey === lit(d))
 
-  /** Monthly-mart input: the whole month containing `d` (the reference
-    * deletes+rebuilds the month partition, 11_focos_mensal_municipio.sql),
-    * still bounded by a file_date partition window around the month. */
-  def monthInput(enrichedAll: DataFrame, d: Date): DataFrame = {
-    val ld = d.toLocalDate
-    val mStart = Date.valueOf(ld.withDayOfMonth(1))
-    val mEnd = Date.valueOf(ld.withDayOfMonth(ld.lengthOfMonth))
-    enrichedAll
-      .filter(col("file_date").between(
-        date_sub(lit(mStart), retentionDays), date_add(lit(mEnd), retentionDays)))
-      .filter(date_trunc("month", Marts.dayKey).cast("date") === lit(mStart))
-  }
+  /** `file_date` within the retention window around [from, to]. */
+  private def fileDateNear(from: Date, to: Date): Column =
+    col("file_date").between(date_sub(lit(from), retentionDays), date_add(lit(to), retentionDays))
 
   /** EP1 steps 4–7 for one day: ingest → idempotent load → enrich → marts. */
   def runDay(csvPath: String, fileDate: LocalDate): Map[String, Long] =
@@ -339,9 +335,6 @@ final class Pipeline(spark: SparkSession, root: String,
     }
   }
 
-  /** All marts for one day (delete-day-then-insert ≡ dynamic partition
-    * overwrite; the hard-coded file order 10,11,20,21,30 + dashboard layer,
-    * src/etl/marts_runner.py:16-34). */
   /** All mart names, in the reference's file order. */
   val allMarts: Seq[String] = Seq(
     "focos_diario_municipio", "focos_mensal_municipio",
@@ -351,113 +344,80 @@ final class Pipeline(spark: SparkSession, root: String,
     "focos_diario_ti", "focos_mensal_ti",
     "focos_diario_uf_trend", "mv_focos_day_dim")
 
-  /** `only`: rebuild a subset of marts — a backfill that touched one
-    * dimension doesn't pay for the other eleven tables (the reference's
-    * marts_runner applies whatever SQL files it is pointed at,
-    * src/etl/marts_runner.py:16-34). Default rebuilds everything. */
-  def writeMarts(d: Date, only: Set[String] = allMarts.toSet): Unit = {
-    // Mart aggregates are day/month slices — a few thousand rows whatever
-    // the corpus size. AQE's partition coalescing keeps their exchanges
-    // task-efficient at any session parallelism (measured: pinning a
-    // smaller shuffle-partition count here was indistinguishable from
-    // letting AQE coalesce, so no knob).
-    val enrichedAll = readTable("enriched")
-    // each slice feeds ~3 mart aggregates — cache for the duration of the
-    // rebuild so the enriched partitions are scanned once per slice, not
-    // once per mart. Slices are partition-bounded (one day / one month of
-    // facts), so the cache is O(batch), never O(history); released before
-    // returning. Lazy: a subset rebuild materializes only what it reads.
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def slice(df: DataFrame): DataFrame = { val c = df.cache(); cached += c; c }
-    lazy val dayFacts = slice(martInput(enrichedAll, d))
-    lazy val monthFacts = slice(monthInput(enrichedAll, d))
-    lazy val fileDateFacts = slice(enrichedAll.filter(col("file_date") === lit(d)))
-    lazy val monthFileFacts = slice(enrichedAll.filter(
-      date_trunc("month", col("file_date")).cast("date") ===
-        lit(Date.valueOf(d.toLocalDate.withDayOfMonth(1)))))
-    lazy val ufArea = ufAreaDim
-    // The twelve mart tables are INDEPENDENT writes to distinct paths (the
-    // one exception — the trend view reads the daily-UF mart — is ordered
-    // below), and each is a small aggregate job followed by driver-side
-    // commit/listing latency. Submitting them from a bounded pool overlaps
-    // one mart's driver latency with another's executor work instead of
-    // serializing ~12 × (plan + job + commit) — the §2.6 back-fill
-    // pattern; Spark's scheduler runs concurrent jobs FIFO, which is
-    // exactly the desired fill-the-tail behavior. 3 in flight is enough
-    // to hide the latency without the tiny aggregates fighting for cores.
-    // Job groups/descriptions are thread-local, so per-thread submission
-    // also keeps the UI attribution correct. Failures propagate: every
-    // future is awaited and the first throwable rethrown.
-    def mart(name: String)(build: => DataFrame, part: String = "day"): Unit =
-      if (only(name)) {
-        val b = build
-        Marts.writePartitioned(b, path(s"marts/$name"), part)
-        noteWrite(s"marts/$name", b, Seq(part))
-      }
-    val bodies = scala.collection.mutable.Buffer[() => Unit]()
-    def submit(body: => Unit): Unit = bodies += (() => body)
-    try {
-      // materialize the shared cached slices up front on THIS thread (the
-      // lazy vals are thread-safe but a racing first-use from two pool
-      // threads would serialize on the lazy-init lock while holding a
-      // running job); forcing the ones this rebuild reads keeps the pool
-      // threads to pure aggregate+write work. Referencing the lazy val is
-      // enough — the cache itself stays lazy Spark-side.
-      val needsDay = Seq("focos_diario_municipio", "focos_diario_uf",
-        "mv_focos_day_dim").exists(only)
-      val needsMonth = Seq("focos_mensal_municipio", "focos_mensal_uf").exists(only)
-      val needsFile = Seq("focos_diario_bioma", "focos_diario_uc",
-        "focos_diario_ti").exists(only)
-      val needsMonthFile = Seq("focos_mensal_bioma", "focos_mensal_uc",
-        "focos_mensal_ti").exists(only)
-      if (needsDay) dayFacts
-      if (needsMonth) monthFacts
-      if (needsFile) fileDateFacts
-      if (needsMonthFile) monthFileFacts
-      if (Seq("focos_diario_uf", "focos_mensal_uf").exists(only)) ufArea
+  /** True where the date column `day` falls in d's month. */
+  private def inMonthOf(d: Date)(day: Column): Column =
+    Marts.Monthly.of(day) === lit(Date.valueOf(d.toLocalDate.withDayOfMonth(1)))
 
-      submit {
-        mart("focos_diario_municipio")(Marts.focosDiarioMunicipio(dayFacts))
-        mart("focos_mensal_municipio")(Marts.focosMensalMunicipio(monthFacts), "month")
-      }
-      submit {
-        mart("focos_diario_uf")(Marts.focosDiarioUf(dayFacts, ufArea))
-        mart("focos_mensal_uf")(Marts.focosMensalUf(monthFacts, ufArea), "month")
-        // trend view over the (small) daily UF mart — W1/W2 moving
-        // averages; stays on the SAME task as its input mart's write
-        if (only("focos_diario_uf_trend")) {
-          val trend = Marts.focosDiarioUfTrend(readTable("marts/focos_diario_uf"))
-          trend.write.mode("overwrite").parquet(path("marts/focos_diario_uf_trend"))
-          noteWrite("marts/focos_diario_uf_trend", trend, Seq.empty)
+  /** The count frame ([[Marts.counts]]) d's marts roll up: the enriched
+    * rows in the `file_date` partition window around d's month whose day
+    * key or file date falls in that month. At most one month of (day,
+    * dimension) groups, whatever the history. */
+  private[graft] def martCounts(d: Date): DataFrame = {
+    val ld = d.toLocalDate
+    Marts.counts(readTable("enriched")
+      .filter(fileDateNear(Date.valueOf(ld.withDayOfMonth(1)),
+        Date.valueOf(ld.withDayOfMonth(ld.lengthOfMonth))))
+      .filter(inMonthOf(d)(Marts.dayKey) || inMonthOf(d)(col("file_date"))))
+  }
+
+  /** Rebuild the marts of day `d`: the `d` partition of each daily mart and
+    * the partition of d's month of each monthly mart (delete-then-insert ≡
+    * dynamic partition overwrite; the reference's file order 10,11,20,21,30
+    * plus the dashboard layer, src/etl/marts_runner.py:16-34). `only`
+    * rebuilds a subset — a backfill that touched one dimension doesn't pay
+    * for the other eleven tables; an empty set builds nothing.
+    *
+    * Every mart is a rollup of ONE cached count frame, [[martCounts]].
+    * Each mart's input is a filter on that frame with the row set a
+    * raw-row mart would read: the municipality/UF marts and the cube take
+    * day `d` (with [[martInput]]'s `file_date` bound) or d's month on the
+    * day key; the biome/UC/TI marts take `file_date` = d or d's month
+    * (§7.4 risk 5). The frame is cached for the rebuild and released
+    * before returning.
+    *
+    * The mart writes are independent (the trend view, which reads the
+    * daily-UF mart, runs after it on the same thread), so they are
+    * submitted from a 3-thread pool: one mart's driver-side commit and
+    * listing overlaps another's executor work (§2.6), and Spark runs the
+    * concurrent jobs FIFO. `inParallel` awaits every write before the
+    * first failure surfaces. */
+  def writeMarts(d: Date, only: Set[String] = allMarts.toSet): Unit = if (only.nonEmpty) {
+    val counts = martCounts(d).cache()
+    try {
+      val onDay = counts.filter(col("day") === lit(d) && fileDateNear(d, d))
+      val onMonth = counts.filter(inMonthOf(d)(col("day")))
+      val onFileDay = counts.filter(col("file_date") === lit(d))
+      val onFileMonth = counts.filter(inMonthOf(d)(col("file_date")))
+      import Marts.{Daily, Monthly, Grain}
+      def mart(name: String, g: Grain)(build: => DataFrame): Unit =
+        if (only(name)) {
+          val b = build
+          Marts.writePartitioned(b, path(s"marts/$name"), g.name)
+          noteWrite(s"marts/$name", b, Seq(g.name))
         }
+      // a mart family's daily then monthly table
+      def family(name: String, daily: DataFrame, monthly: DataFrame)(
+          build: (DataFrame, Grain) => DataFrame): Unit = {
+        mart(s"focos_diario_$name", Daily)(build(daily, Daily))
+        mart(s"focos_mensal_$name", Monthly)(build(monthly, Monthly))
       }
-      // biome/UC/TI marts key on raw file_date (40/50/60_*.sql — §7.4 risk 5)
-      submit {
-        mart("focos_diario_bioma")(Marts.focosDiarioBioma(fileDateFacts))
-        mart("focos_mensal_bioma")(Marts.focosMensalBioma(monthFileFacts), "month")
-      }
-      submit {
-        mart("focos_diario_uc")(Marts.focosDiarioKeyed(fileDateFacts, "cd_cnuc", Seq("uc_nome")))
-        mart("focos_mensal_uc")(Marts.focosMensalKeyed(monthFileFacts, "cd_cnuc", Seq("uc_nome")), "month")
-      }
-      submit {
-        mart("focos_diario_ti")(Marts.focosDiarioKeyed(fileDateFacts, "terrai_cod", Seq("ti_nome")))
-        mart("focos_mensal_ti")(Marts.focosMensalKeyed(monthFileFacts, "terrai_cod", Seq("ti_nome")), "month")
-      }
-      // fact cube for the serving layer (065_mv_focos_day_dim.sql) — cd_uf is
-      // the UF code column the reference denormalizes; our dims carry uf text
-      submit {
-        mart("mv_focos_day_dim")(
-          Marts.factCube(dayFacts.withColumn("cd_uf", col("mun_uf"))))
-      }
-      // 3 in flight (Pipeline.inParallel awaits ALL before surfacing the
-      // first failure, so no write is still in flight when the caller sees
-      // the exception or the unpersist below runs)
-      Pipeline.inParallel(bodies.toSeq, threads = 3)
+      Pipeline.inParallel(Seq(
+        () => family("municipio", onDay, onMonth)(Marts.municipio),
+        () => {
+          family("uf", onDay, onMonth)(Marts.uf(_, ufAreaDim, _))
+          if (only("focos_diario_uf_trend")) {
+            val trend = Marts.focosDiarioUfTrend(readTable("marts/focos_diario_uf"))
+            trend.write.mode("overwrite").parquet(path("marts/focos_diario_uf_trend"))
+            noteWrite("marts/focos_diario_uf_trend", trend, Seq.empty)
+          }
+        },
+        () => family("bioma", onFileDay, onFileMonth)(Marts.keyed(_, _, "cd_bioma", Seq("bioma"))),
+        () => family("uc", onFileDay, onFileMonth)(Marts.keyed(_, _, "cd_cnuc", Seq("uc_nome"))),
+        () => family("ti", onFileDay, onFileMonth)(Marts.keyed(_, _, "terrai_cod", Seq("ti_nome"))),
+        () => mart("mv_focos_day_dim", Daily)(Marts.cube(onDay))),
+        threads = 3)
       ()
-    } finally {
-      cached.foreach(_.unpersist(false))
-    }
+    } finally counts.unpersist(false)
   }
 
   /** Checked-flag read path: re-enrich only rows some dimension has not

@@ -264,13 +264,6 @@ object Serve {
       .orderBy(col("n_focos").desc, col("key").asc)
   }
 
-  /** Legend for a choropleth result: collect the (≤5 570) aggregated values
-    * driver-side and run the exact break algorithm, as the reference does
-    * in Python (main.py:1096-1113). */
-  def legendFor(choropleth: DataFrame, valueCol: String = "n_focos"): Legend =
-    computeBreaks(choropleth.select(col(valueCol).cast("long")).collect()
-      .map(r => if (r.isNullAt(0)) 0L else r.getLong(0)).toSeq)
-
   /** /api/lookup/mun (main.py:1133-1208): geometry row for the key LEFT
     * JOIN the fact-derived display name; uf upper-cased for both uf fields.
     * Empty result ⇔ the reference's 404.
@@ -451,14 +444,6 @@ object Serve {
   /** /api/validate legend-monotonicity check (main.py:1792-1820). */
   def legendMonotonic(l: Legend): Boolean =
     l.breaks.length >= 2 && l.breaks.sliding(2).forall(p => p(1) > p(0))
-
-  /** /api/validate bounds-vs-geo check: bbox ratio ≤ 50 (main.py:1822-1846). */
-  def validateBboxRatio(m: ShapeMetrics): Boolean = m.bboxRatio <= 50.0
-
-  /** /api/validate points smoke: the page respects its limit (main.py:1848-1861). */
-  def validatePointsSmoke(facts: DataFrame, from: LocalDate, to: LocalDate,
-                          limit: Int = 200): Boolean =
-    points(facts, from, to, None, limit)._1.size <= limit
 
   /** /api/validate consistency triple (main.py:1733-1790): totals ==
     * timeseries sum == per-entity (choropleth) sum under any filter combo.

@@ -754,15 +754,6 @@ object StreamingJobs {
         .option("checkpointLocation", s"$dir/ckpt")
         .trigger(Trigger.AvailableNow()).start()
       try q.awaitTermination() finally q.stop()
-      // SPARK_GRAFT_DEBUG_STREAM=1: per-drain micro-batch duration
-      // breakdown (where a drain's fixed cost actually goes — trigger
-      // execution vs offset/commit WAL vs state commit), for the same
-      // measure-don't-guess loop SPARK_GRAFT_DEBUG_JOBS gives batch jobs
-      if (sys.env.contains("SPARK_GRAFT_DEBUG_STREAM"))
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[drain-dbg] $name batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-        }
       stream.schema
     }
     val outSchema = withDrainParallelism(spark) {

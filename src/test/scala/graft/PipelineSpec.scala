@@ -205,8 +205,54 @@ class PipelineSpec extends AnyFunSuite {
     val (p, root, _) = fixture
     val plan = p.martInput(spark.read.parquet(s"$root/enriched"),
       java.sql.Date.valueOf(d1)).queryExecution.executedPlan.toString
-    val pf = "PartitionFilters: \\[[^\\]]*file_date[^\\]]*\\]".r.findFirstIn(plan)
-    assert(pf.isDefined, s"no file_date partition filter in plan:\n$plan")
+    val pf = "PartitionFilters: \\[[^\\]]*file_date[^\\]]*\\]".r
+    assert(pf.findFirstIn(plan).isDefined, s"no file_date partition filter in plan:\n$plan")
+    // the count frame every mart rolls up reads under the same kind of bound
+    val counts = p.martCounts(java.sql.Date.valueOf(d1)).queryExecution.executedPlan.toString
+    assert(pf.findFirstIn(counts).isDefined,
+      s"no file_date partition filter on the count-frame scan:\n$counts")
+  }
+
+  test("enriched-ahead-of-curated heal: a re-run re-inserts the rows curated " +
+    "lacks and does not enrich them twice") {
+    val dir2 = Files.createTempDirectory("graft_pipeline_heal")
+    val root = dir2.resolve("warehouse").toString
+    val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
+    val day = LocalDate.parse("2024-03-01")
+    val csv = writeDailyCsv(dir2, day)
+    assert(p.runDay(csv, day)("inserted") == 5)
+
+    // Simulate a crashed batch whose enriched append landed and whose
+    // curated append did not: the curated partition loses two of its rows.
+    val part = s"$root/curated/file_date=$day"
+    val stored = spark.read.parquet(part)
+    val kept = stored.orderBy("event_hash").collect().take(3)
+    spark.createDataFrame(java.util.Arrays.asList(kept: _*), stored.schema)
+      .write.mode("overwrite").parquet(part)
+    assert(spark.read.parquet(part).count() == 3)
+    assert(spark.read.parquet(s"$root/enriched").count() == 5)
+
+    val again = p.runDay(csv, day)
+    assert(again("attempted") == 5)
+    assert(again("inserted") == 2)
+    assert(spark.read.parquet(s"$root/curated").count() == 5)
+    val enriched = spark.read.parquet(s"$root/enriched")
+    assert(enriched.count() == 5)
+    assert(enriched.select("event_hash").distinct().count() == 5)
+    assert(p.checkDay(day).isEmpty)
+  }
+
+  test("inParallel: bodies that outlive the limit fail the call after about " +
+    "one limit, not one limit per body") {
+    import scala.concurrent.duration._
+    val limit = 400.millis
+    val t0 = System.nanoTime()
+    intercept[java.util.concurrent.TimeoutException] {
+      Pipeline.inParallel(Seq.fill(4)(() => Thread.sleep(10000)), threads = 4, limit = limit)
+    }
+    val sec = (System.nanoTime() - t0) / 1e9
+    // a fresh limit per await would take 4 × 0.4 s
+    assert(sec < 1.2, s"took $sec s for four bodies under a 0.4 s limit")
   }
 
   test("curatedDay union view: a re-run heals curated orphans AND admits the " +
@@ -320,4 +366,175 @@ class PipelineSpec extends AnyFunSuite {
     // 3/3/3 tie -> earliest day wins (DISTINCT ON tiebreak, W3)
     assert(ro.getAs[java.sql.Date]("peak_day").toLocalDate == d1)
   }
+
+  test("marts rolled up from the count frame equal per-mart aggregation of " +
+    "the raw enriched store, cross-day and cross-month rows included") {
+    val dir2 = Files.createTempDirectory("graft_pipeline_marts")
+    val root = dir2.resolve("warehouse").toString
+    val p = new Pipeline(spark, root, municipios, biomas, Some(ucs), Some(tis))
+    // lat;lon;view_ts — Alpha (UC box lon<5, TI box lon>5.5), Beta lon>10.5,
+    // the Alpha/Beta gap at lon 10.25 (no municipality) and lon 25 (no dim)
+    def file(day: String, rows: (String, String, String)*): String = {
+      val f = dir2.resolve(s"$day.csv")
+      Files.writeString(f,
+        "latitude;longitude;data_hora_gmt;satelite;municipio;estado;bioma\n" +
+          rows.map { case (lat, lon, ts) => s"$lat;$lon;$ts;AQUA;X;RO;Amazonia" }
+            .mkString("\n") + "\n")
+      f.toString
+    }
+    val files = Seq(
+      "2024-01-30" -> file("2024-01-30",
+        ("2,5", "1,5", "2024-01-30 10:00:00"), ("2,9", "1,9", "2024-01-30 10:30:00"),
+        ("3,5", "7,5", "2024-01-30 11:00:00"), ("1,5", "11,5", "2024-01-30 12:00:00"),
+        ("4,0", "2,0", "2024-01-31 01:00:00"), // leads its file day
+        ("5,0", "3,0", "2024-01-29 23:00:00")), // lags it
+      "2024-01-31" -> file("2024-01-31",
+        ("2,6", "1,6", "2024-01-31 10:00:00"), ("8,5", "15,5", "2024-01-31 11:00:00"),
+        ("6,0", "6,0", "2024-01-30 22:00:00"),
+        ("6,5", "6,5", "sem data"), // unparseable: the day key falls back to file_date
+        ("5,0", "10,25", "2024-01-31 12:00:00")), // no municipality
+      // next-month files carrying previous-month view days
+      "2024-02-01" -> file("2024-02-01",
+        ("2,7", "1,7", "2024-02-01 10:00:00"), ("3,6", "7,6", "2024-02-01 13:00:00"),
+        ("7,0", "8,0", "2024-01-31 20:00:00"), ("7,2", "8,2", "2024-01-31 21:00:00"),
+        ("7,5", "12,0", "2024-01-30 21:00:00"),
+        ("5,0", "25,0", "2024-02-01 09:00:00")), // outside every dimension
+      "2024-02-02" -> file("2024-02-02",
+        ("2,8", "1,8", "2024-02-02 10:00:00"), ("1,6", "11,6", "2024-02-01 23:30:00"),
+        ("9,0", "9,0", "2024-01-31 05:00:00")))
+    // the re-run of 2024-01-31 rebuilds January after February's files
+    // brought it late rows
+    val runs = files ++ files.take(2).drop(1)
+
+    val ufArea = graft.marts.Marts.ufAreaRollup(municipios.select(col("uf"), col("area_km2")))
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    // expected content of each mart, by partition value, as dynamic
+    // partition overwrite leaves it after each run
+    val expected = scala.collection.mutable.Map[String, Map[String, Seq[String]]]()
+      .withDefaultValue(Map.empty)
+    for ((day, csv) <- runs) {
+      val ld = LocalDate.parse(day)
+      p.runDay(csv, ld)
+      val d = java.sql.Date.valueOf(ld)
+      val e = spark.read.parquet(s"$root/enriched")
+      val (dayIn, monthIn) = (RawRowMarts.dayInput(e, d), RawRowMarts.monthInput(e, d))
+      val fileDayIn = e.filter(col("file_date") === lit(d))
+      val fileMonthIn = e.filter(date_trunc("month", col("file_date")).cast("date") ===
+        lit(java.sql.Date.valueOf(ld.withDayOfMonth(1))))
+      val reference = Seq(
+        ("focos_diario_municipio", "day", RawRowMarts.focosDiarioMunicipio(dayIn)),
+        ("focos_mensal_municipio", "month", RawRowMarts.focosMensalMunicipio(monthIn)),
+        ("focos_diario_uf", "day", RawRowMarts.focosDiarioUf(dayIn, ufArea)),
+        ("focos_mensal_uf", "month", RawRowMarts.focosMensalUf(monthIn, ufArea)),
+        ("focos_diario_bioma", "day", RawRowMarts.focosDiarioKeyed(fileDayIn, "cd_bioma", Seq("bioma"))),
+        ("focos_mensal_bioma", "month", RawRowMarts.focosMensalKeyed(fileMonthIn, "cd_bioma", Seq("bioma"))),
+        ("focos_diario_uc", "day", RawRowMarts.focosDiarioKeyed(fileDayIn, "cd_cnuc", Seq("uc_nome"))),
+        ("focos_mensal_uc", "month", RawRowMarts.focosMensalKeyed(fileMonthIn, "cd_cnuc", Seq("uc_nome"))),
+        ("focos_diario_ti", "day", RawRowMarts.focosDiarioKeyed(fileDayIn, "terrai_cod", Seq("ti_nome"))),
+        ("focos_mensal_ti", "month", RawRowMarts.focosMensalKeyed(fileMonthIn, "terrai_cod", Seq("ti_nome"))),
+        ("mv_focos_day_dim", "day", RawRowMarts.factCube(dayIn.withColumn("cd_uf", col("mun_uf")))))
+      for ((name, part, ref0) <- reference) {
+        // a partitioned table reads back with its partition column last
+        val ref = ref0.select((ref0.columns.filterNot(_ == part) :+ part).map(col).toIndexedSeq: _*)
+        expected(name) = expected(name) ++ rows(ref).groupBy(_.split('|').last)
+        val got = spark.read.parquet(s"$root/marts/$name")
+        assert(got.schema.map(f => f.name -> f.dataType) == ref.schema.map(f => f.name -> f.dataType),
+          s"$name schema after $day")
+        assert(rows(got) == expected(name).values.flatten.toSeq.sorted, s"$name rows after $day")
+      }
+      val trend = spark.read.parquet(s"$root/marts/focos_diario_uf_trend")
+      assert(rows(trend) == rows(graft.marts.Marts.focosDiarioUfTrend(
+        spark.read.parquet(s"$root/marts/focos_diario_uf"))), s"trend after $day")
+      assert(p.checkDay(ld).isEmpty)
+    }
+    // the fixture really holds the rows the rollup must get right
+    val e = spark.read.parquet(s"$root/enriched")
+    assert(e.count() == 20)
+    assert(e.filter(graft.marts.Marts.dayKey =!= col("file_date")).count() == 8)
+    assert(e.filter(date_trunc("month", graft.marts.Marts.dayKey) =!=
+      date_trunc("month", col("file_date"))).count() == 4)
+    assert(e.filter(col("mun_cd_mun").isNull).count() == 2)
+    // count-frame groups of more than one row: a rollup that counted
+    // groups instead of summing `n` would not show on single-row groups
+    assert(p.martCounts(java.sql.Date.valueOf("2024-01-31")).filter(col("n") > 1).count() == 2)
+  }
+}
+
+/** The per-mart builders over raw enriched rows that the count-frame
+  * rollups replaced, kept as the reference the rollups must equal. */
+private object RawRowMarts {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.types.DecimalType
+
+  val retentionDays = 45
+  val dayKey: Column = coalesce(to_date(col("view_ts")), col("file_date"))
+
+  def dayInput(enrichedAll: DataFrame, d: java.sql.Date): DataFrame =
+    enrichedAll
+      .filter(col("file_date").between(
+        date_sub(lit(d), retentionDays), date_add(lit(d), retentionDays)))
+      .filter(dayKey === lit(d))
+
+  def monthInput(enrichedAll: DataFrame, d: java.sql.Date): DataFrame = {
+    val ld = d.toLocalDate
+    val mStart = java.sql.Date.valueOf(ld.withDayOfMonth(1))
+    val mEnd = java.sql.Date.valueOf(ld.withDayOfMonth(ld.lengthOfMonth))
+    enrichedAll
+      .filter(col("file_date").between(
+        date_sub(lit(mStart), retentionDays), date_add(lit(mEnd), retentionDays)))
+      .filter(date_trunc("month", dayKey).cast("date") === lit(mStart))
+  }
+
+  private def per100km2(n: Column, area: Column): Column =
+    round((lit(100) * n.cast(DecimalType(38, 10))) /
+      when(area === 0, null).otherwise(area).cast(DecimalType(38, 10)), 4)
+
+  def focosDiarioMunicipio(enriched: DataFrame): DataFrame =
+    enriched.filter(col("mun_cd_mun").isNotNull)
+      .groupBy(dayKey.as("day"), col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"))
+      .agg(max("mun_area_km2").as("mun_area_km2"), count(lit(1)).as("n_focos"))
+      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("mun_area_km2")))
+
+  def focosMensalMunicipio(enriched: DataFrame): DataFrame =
+    enriched.filter(col("mun_cd_mun").isNotNull)
+      .groupBy(date_trunc("month", dayKey).cast("date").as("month"),
+        col("mun_cd_mun"), col("mun_nm_mun"), col("mun_uf"))
+      .agg(max("mun_area_km2").as("mun_area_km2"), count(lit(1)).as("n_focos"))
+      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("mun_area_km2")))
+
+  def focosDiarioUf(enriched: DataFrame, ufArea: DataFrame): DataFrame =
+    enriched.filter(col("mun_uf").isNotNull)
+      .groupBy(dayKey.as("day"), col("mun_uf").as("uf"))
+      .agg(count(lit(1)).as("n_focos"))
+      .join(broadcast(ufArea), "uf")
+      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("uf_area_km2")))
+
+  def focosMensalUf(enriched: DataFrame, ufArea: DataFrame): DataFrame =
+    enriched.filter(col("mun_uf").isNotNull)
+      .groupBy(date_trunc("month", dayKey).cast("date").as("month"),
+        col("mun_uf").as("uf"))
+      .agg(count(lit(1)).as("n_focos"))
+      .join(broadcast(ufArea), "uf")
+      .withColumn("focos_por_100km2", per100km2(col("n_focos"), col("uf_area_km2")))
+
+  def focosDiarioKeyed(enriched: DataFrame, keyCol: String, labelCols: Seq[String]): DataFrame =
+    enriched.filter(col(keyCol).isNotNull)
+      .groupBy(col("file_date").as("day"), col(keyCol))
+      .agg(labelCols.map(c => max(c).as(c)).head,
+        (labelCols.map(c => max(c).as(c)).tail :+ count(lit(1)).cast("int").as("focos")): _*)
+
+  def focosMensalKeyed(enriched: DataFrame, keyCol: String, labelCols: Seq[String]): DataFrame =
+    enriched.filter(col(keyCol).isNotNull)
+      .groupBy(date_trunc("month", col("file_date")).cast("date").as("month"), col(keyCol))
+      .agg(labelCols.map(c => max(c).as(c)).head,
+        (labelCols.map(c => max(c).as(c)).tail :+ count(lit(1)).cast("int").as("focos")): _*)
+
+  def factCube(enrichedFull: DataFrame): DataFrame =
+    enrichedFull.groupBy(
+        dayKey.as("day"),
+        col("mun_uf").as("uf"), col("cd_uf"), col("mun_cd_mun").as("cd_mun"),
+        col("mun_nm_mun"), col("bioma"), col("cd_bioma"),
+        col("uc_nome"), col("cd_cnuc"), col("ti_nome"), col("terrai_cod"))
+      .agg(count(lit(1)).as("n_focos"))
 }

@@ -85,10 +85,19 @@ class PlanAuditSpec extends AnyFunSuite {
     // the enriched proxy's customer/nation joins must broadcast — the
     // fact side never shuffles for a dimension
     assert(!p.contains("SortMergeJoin"), s"dim join fell back to SMJ:\n$p")
+    // the mart rolls up the memoized count frame, whose build plan prints
+    // below its InMemoryRelation, apart from the query's own operators
+    val at = p.indexOf("InMemoryRelation")
+    assert(at >= 0, s"the mart no longer reads the memoized count frame:\n$p")
+    val (query, countFrame) = p.splitAt(at)
     // shuffles: exactly the mart's agg hash exchange + the ORDER BY range
-    // exchange (broadcast exchanges are dim-sized, not data shuffles)
-    val shuffles = "Exchange (hash|range)partitioning".r.findAllIn(p).size
+    // exchange (broadcast exchanges are dim-sized, not data shuffles), and
+    // the count frame's own aggregation exchange, paid once when memoized
+    val exchange = "Exchange (hash|range)partitioning".r
+    val shuffles = exchange.findAllIn(query).size
     assert(shuffles <= 2, s"more than agg+sort shuffles ($shuffles):\n$p")
+    assert(exchange.findAllIn(countFrame).size == 1,
+      s"the count frame's build is not one aggregation exchange:\n$p")
   }
 
   test("dedup_exact: one hash shuffle on the digest, nothing more") {
